@@ -1,10 +1,10 @@
 """One benchmark process: a fresh Spark session running one workload.
 
 Started by ``run.py`` with the repository root on ``PYTHONPATH`` and a
-temporary directory as its working directory. ``--probe`` only sets up a
-session and reports when it was ready; otherwise the worker runs the cold
-pass, warm-up passes and measured passes, checks outputs and writes its
-raw figures as JSON to ``--out``.
+temporary directory as its working directory. It measures its own set-up
+(process start to a ready session), runs the cold pass, then measured
+passes for at least ``--seconds`` (no warm-up), checks outputs and writes
+its raw figures as JSON to ``--out``.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ import time
 import traceback
 
 # The benchmark's own modules are imported after the session is ready, so
-# a set-up sample pays for the program's imports only.
+# the set-up time pays for the program's imports only.
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -89,7 +89,6 @@ def run_one(p, wl, tracer) -> tuple[float, int | None]:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--probe", action="store_true")
     ap.add_argument("--workload")
     ap.add_argument("--inputs")
     ap.add_argument("--seconds", type=float, default=10.0)
@@ -101,11 +100,6 @@ def main() -> int:
 
     spark = ready_session()
     ready = time.time()
-    if args.probe:
-        with open(args.out, "w", encoding="utf-8") as fh:
-            json.dump({"setup_s": ready - spawned}, fh)
-        os._exit(0)  # run.py stops the JVM and waits for it
-
     import spans as tracing
     from workloads import WORKLOADS, Pass
 
@@ -177,7 +171,7 @@ def main() -> int:
     phases["done"] = time.time()
     with open(args.out, "w", encoding="utf-8") as fh:
         json.dump(res, fh)
-    os._exit(0)  # as for the probe
+    os._exit(0)  # run.py stops the JVM and waits for it
 
 
 if __name__ == "__main__":
