@@ -106,38 +106,44 @@ def main_mover(argv: list[str] | None = None) -> int:
 
     Unlike the reference — which writes, then ``count()``s the *source
     plan again* (a second full scan, ``mover.py:33-35``) — the row count
-    rides the write itself via the ``Observation`` API: metrics
+    rides the write itself via the ``Observation`` API
+    (:func:`~spark_pipeline_spark.io.sinks.save_counted`): metrics
     accumulate inside the one write job, so ``log-count`` costs ZERO
-    extra scans, zero cache memory, and zero extra actions.
+    extra scans, zero cache memory, and zero extra actions on file
+    sinks. A disabled target writes nothing and ``log-count`` runs one
+    plain ``count()``; table, JDBC and streaming-csv targets also count
+    with one ``count()`` after the write.
     """
     conf, _ = _parse_args(argv, "mover")
     t0 = time.time()
     spark = _session(conf, "mover")
-    from spark_pipeline_spark.io.sinks import save
+    from spark_pipeline_spark.io.sinks import save, save_counted
     from spark_pipeline_spark.io.sources import load
 
     df = load(spark, conf["source"])
-    obs = None
     if conf.get("log-count", False):
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation("mover")
-        df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
-    save(df, conf["target"])
-    if obs is not None:
-        print(f"moved rows: {obs.get['n_rows']}")
+        print(f"moved rows: {save_counted(df, conf['target'])}")
+    else:
+        save(df, conf["target"])
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0
 
 
 def main_scorer(argv: list[str] | None = None) -> int:
     """Distributed batch inference (``scorer.py:12-65``): load → key
-    hygiene → pandify → score via mapInPandas → audit columns → sink."""
+    hygiene → pandify → score via mapInPandas → audit columns → sink.
+
+    The ``scored rows`` count rides the write as an ``Observation``
+    (:func:`~spark_pipeline_spark.io.sinks.save_counted`): one job and no
+    cached copy left in the session, where the reference ``cache()``s,
+    ``count()``s and then writes. A disabled target scores and counts in
+    one plain ``count()`` and writes nothing; table, JDBC and
+    streaming-csv targets count with one ``count()`` after the write.
+    """
     conf, _ = _parse_args(argv, "scorer")
     t0 = time.time()
     spark = _session(conf, "scorer")
-    from spark_pipeline_spark.io.sinks import save
+    from spark_pipeline_spark.io.sinks import save_counted
     from spark_pipeline_spark.io.sources import load
     from spark_pipeline_spark.operators.columns import (
         pandify,
@@ -159,9 +165,7 @@ def main_scorer(argv: list[str] | None = None) -> int:
         broadcast_model=bool(mconf.get("broadcast-model", False)),
     )
     scored = with_audit_columns(scored, model_name=mconf.get("name", "model"))
-    scored = scored.cache()
-    print(f"scored rows: {scored.count()}")
-    save(scored, conf["target"])
+    print(f"scored rows: {save_counted(scored, conf['target'])}")
     print(f"execution time: {time.time() - t0:.1f}s")
     return 0
 

@@ -215,3 +215,32 @@ def save(df: DataFrame, conf: Mapping[str, Any]) -> None:
         write_single_csv(df, conf["path"], sep=conf.get("sep", "\t"), streaming=True)
     else:
         raise ValueError(f"unknown storage type: {storage!r}")
+
+
+# Storages whose save() runs the frame's own plan as its write action, so
+# an Observation on the frame is fulfilled by that action. Catalog-table
+# writes run the plan inside a nested command and the streaming csv sink
+# drains it after its action has returned: an Observation there is never
+# (or not reliably) fulfilled, and JDBC is not known to fulfil one.
+_OBSERVED_STORAGES = frozenset({"file", "hdfs", "local", "single-csv"})
+
+
+def save_counted(df: DataFrame, conf: Mapping[str, Any]) -> int:
+    """:func:`save`, returning the number of rows written.
+
+    On file and ``single-csv`` sinks the count rides the write job as an
+    ``Observation``: one job, no cache, no second scan. A disabled sink
+    runs no action at all, and the other sinks run the plan where an
+    Observation is not fulfilled; those count with one plain ``count()``
+    after the save (a second pass over the frame), so the count can never
+    wait on an action that did not run.
+    """
+    if conf.get("disabled", False) or conf.get("storage", "file") not in _OBSERVED_STORAGES:
+        save(df, conf)
+        return df.count()
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation("save_counted")
+    save(df.observe(obs, F.count(F.lit(1)).alias("n_rows")), conf)
+    return obs.get["n_rows"]

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import threading
 
 import pandas as pd
 import pytest
@@ -152,15 +153,13 @@ def test_mover_cli_end_to_end(spark, tmp_path, capsys):
     assert f"moved rows: {n_src}" in capsys.readouterr().out
 
 
-def test_scorer_cli_end_to_end(spark, tmp_path):
-    from spark_pipeline_spark.cli import main_scorer
+def _score_conf(tmp_path, target):
     from spark_pipeline_spark.models import LogisticModel
     from spark_pipeline_spark.operators.training import save_model
 
     model_path = str(tmp_path / "logit.bin")
     save_model(LogisticModel({"c_acctbal": 0.001}, intercept=-2.0), model_path)
-    out = str(tmp_path / "scored")
-    conf = _write_conf(
+    return _write_conf(
         tmp_path,
         "score.json",
         {
@@ -170,16 +169,82 @@ def test_scorer_cli_end_to_end(spark, tmp_path):
                 "transform-sql": "SELECT c_custkey AS uid, c_acctbal FROM dataset_temp",
             },
             "model": {"path": model_path, "name": "logit-v1", "cols-to-save": ["uid"]},
-            "target": {"storage": "file", "path": out},
+            "target": target,
         },
     )
+
+
+def test_scorer_cli_end_to_end(spark, tmp_path, capsys):
+    from spark_pipeline_spark.cli import main_scorer
+
+    out = str(tmp_path / "scored")
+    conf = _score_conf(tmp_path, {"storage": "file", "path": out})
+    spark.catalog.clearCache()  # earlier tests may leave their own caches
     assert main_scorer(["--conf", conf]) == 0
+    n_src = read_file(spark, f"{SF_SMALL}/customer.parquet").count()
+    # the count rides the write (Observation): no cached copy is left behind
+    assert f"scored rows: {n_src}" in capsys.readouterr().out
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     back = read_file(spark, out)
-    assert back.count() == read_file(spark, f"{SF_SMALL}/customer.parquet").count()
+    assert back.count() == n_src
     assert {"model_name", "current_dt", "uid", "target_proba"} <= set(back.columns)
     assert back.filter(F.col("model_name") != "logit-v1").count() == 0
     probs = back.select("target_proba").toPandas()["target_proba"]
     assert ((probs >= 0) & (probs <= 1)).all()
+
+
+def _returns_within(fn, seconds=60):
+    """Run ``fn`` in a daemon thread; fail if it has not returned in time
+    (a count that waits on an action that never ran blocks forever)."""
+    result = {}
+
+    def run():
+        try:
+            result["rc"] = fn()
+        except BaseException as exc:  # re-raised in the test thread
+            result["exc"] = exc
+
+    th = threading.Thread(target=run, daemon=True)
+    th.start()
+    th.join(seconds)
+    assert not th.is_alive(), f"did not return within {seconds}s"
+    if "exc" in result:
+        raise result["exc"]
+    return result["rc"]
+
+
+@pytest.mark.parametrize(
+    "target",
+    [{"disabled": True}, {"storage": "csv", "sep": ","}],
+    ids=["disabled", "streaming-csv"],
+)
+def test_mover_log_count_returns_on_sinks_without_observed_write(
+    spark, tmp_path, capsys, target
+):
+    from spark_pipeline_spark.cli import main_mover
+
+    target = {**target, "path": str(tmp_path / "moved.csv")}
+    conf = _write_conf(
+        tmp_path,
+        "move.json",
+        {
+            "source": {"storage": "file", "path": f"{SF_SMALL}/nation.parquet"},
+            "target": target,
+            "log-count": True,
+        },
+    )
+    assert _returns_within(lambda: main_mover(["--conf", conf])) == 0
+    assert "moved rows: 25" in capsys.readouterr().out
+    assert (tmp_path / "moved.csv").exists() != target.get("disabled", False)
+
+
+def test_scorer_disabled_target_counts_and_returns(spark, tmp_path, capsys):
+    from spark_pipeline_spark.cli import main_scorer
+
+    conf = _score_conf(tmp_path, {"disabled": True})
+    assert _returns_within(lambda: main_scorer(["--conf", conf])) == 0
+    n_src = read_file(spark, f"{SF_SMALL}/customer.parquet").count()
+    assert f"scored rows: {n_src}" in capsys.readouterr().out
 
 
 def test_trainer_cli_end_to_end(spark, tmp_path):
